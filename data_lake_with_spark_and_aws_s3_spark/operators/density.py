@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.loader import fan_out, load_table
-from .graph import connected_components_star
+from .graph import connected_components
 
 _EPS = 200       # cell width in 1e-4 embedding units (0.02)
 _MINPTS = 10     # points in the 3x3 neighborhood for a dense cell
@@ -186,7 +186,7 @@ def q_grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedges = ddonors.join(
         dense.select(F.col("ck").alias("dst")), "dst"
     ).select("src", "dst")
-    comp = connected_components_star(
+    comp = connected_components(
         dedges, dense.select(F.col("ck").alias("id"))
     ).select(F.col("id").alias("ck"), F.col("component").alias("cluster"))
     # minimum cluster each dense cell offers to its 3x3 neighborhood

@@ -149,8 +149,7 @@ def q_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     under-merge (A~B, B~C); the closure is what makes the entity.
 
     Plan: blocked candidate pairs (equi-join on the block key) ->
-    iterative min-label components (diameter-bounded) -> one
-    members join on name -> two small keyed aggregates (votes,
+    connected components -> one members join on name -> two small keyed aggregates (votes,
     survivorship). Nothing is pairwise outside the bounded blocks.
     Oracle: same pipeline with a recursive-CTE closure."""
     from .graph import connected_components

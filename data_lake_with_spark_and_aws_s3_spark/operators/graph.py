@@ -1,17 +1,12 @@
 """Iterative graph operator: distributed connected components, used
 for TRUE near-duplicate clustering (pairs -> transitive groups).
 
-Spark has no native connected-components; this is min-label
-propagation as iterative DataFrame joins — the simplest member of the
-small-star/large-star family (Kiveris et al., "Connected Components
-in MapReduce and Beyond", SOCC'14):
-
-    label(v) <- min(label(v), min over neighbors u of label(u))
-
-repeated to fixpoint. Each iteration is one join + one aggregate
-(both key-shuffles); iteration count is bounded by the component
-diameter (near-dup clusters: tiny). localCheckpoint() every iteration
-cuts the lineage so plans don't grow O(iterations).
+Spark has no native connected-components; this is alternating
+large-star / small-star contraction (Kiveris et al., "Connected
+Components in MapReduce and Beyond", SOCC'14), which converges in
+O(log^2 n) rounds whatever the component diameter, with a driver
+union-find below _CC_DRIVER_MAX_EDGES edges. localCheckpoint() every
+round cuts the lineage so plans don't grow O(rounds).
 
 The oracle checks the SAME semantics with DuckDB's recursive CTE
 (transitive closure + min-over-reachable) — feasible at test scale,
@@ -43,85 +38,6 @@ _JACCARD_EDGES_SQL = """
 """
 
 
-def connected_components(
-    edges: DataFrame, vertices: DataFrame, max_iter: int = 20
-) -> DataFrame:
-    """(vertex, component) with component = min vertex id reachable.
-
-    edges: columns (src, dst), undirected semantics (symmetrized
-    here). vertices: column (id) — isolated vertices keep their own
-    id. Converges in <= diameter iterations; raises if max_iter is
-    hit with changes still flowing (diameter larger than expected).
-    """
-    # Materialize the (possibly expensive) edge derivation ONCE — the
-    # loop below references sym every iteration and would otherwise
-    # recompute its full upstream lineage (e.g. a blocked quadratic
-    # Jaccard join) per iteration.
-    sym = (
-        edges.select("src", "dst")
-        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    # r8 small-graph short-circuit (same size guard and rationale as
-    # connected_components_star). r9: the checkpoint is LAZY and this
-    # count is the action that materializes it — one job does both
-    # (the former eager checkpoint + count pair was two jobs); below
-    # the cap a driver union-find replaces the whole propagation loop,
-    # above it nothing changes.
-    if sym.count() <= _CC_DRIVER_MAX_EDGES:
-        lab = _driver_union_find_labels(sym)
-        if not lab:
-            return vertices.select("id", F.col("id").alias("component"))
-        lab_df = _union_find_label_frame(sym, lab)
-        return vertices.join(
-            F.broadcast(lab_df), vertices.id == lab_df.v, "left"
-        ).select("id", F.coalesce("label", "id").alias("component"))
-    # Iterate ONLY over edge-incident vertices. In a dedup graph the
-    # overwhelming majority of vertices are isolated (unique docs);
-    # keeping them out of the loop shrinks every per-iteration shuffle
-    # from |V| to |V_dup| — at 100 TB that is the difference between
-    # re-shuffling the whole corpus per round and re-shuffling just the
-    # duplicate neighborhoods. Isolated vertices are attached at the
-    # end with their own id (no join ever sees them).
-    labels = sym.select(F.col("src").alias("v")).distinct().select(
-        "v", F.col("v").alias("label")
-    )
-    for _ in range(max_iter):
-        # candidate label via neighbors
-        nbr = (
-            sym.join(labels, sym.dst == labels.v)
-            .groupBy(F.col("src").alias("v2"))
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        # change detection folded into the label update: `changed` is a
-        # per-row flag, counted from the already-materialized result —
-        # no extra old-vs-new join+shuffle per iteration.
-        new_labels = labels.join(nbr, labels.v == nbr.v2, "left").select(
-            "v",
-            F.least(F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))).alias(
-                "label"
-            ),
-            F.coalesce(F.col("nbr_label") < F.col("label"), F.lit(False)).alias("changed"),
-        )
-        # r8: lazy checkpoint + full-coverage aggregate = ONE job per
-        # round (materializes the checkpoint AND answers "changed?");
-        # the former eager checkpoint + limit(1).count() pair was two.
-        new_labels = new_labels.localCheckpoint(eager=False)
-        changed = new_labels.agg(
-            F.coalesce(F.max(F.col("changed").cast("int")), F.lit(0))
-        ).collect()[0][0]
-        labels = new_labels.select("v", "label")
-        if changed == 0:
-            return vertices.join(labels, vertices.id == labels.v, "left").select(
-                "id", F.coalesce("label", "id").alias("component")
-            )
-    raise RuntimeError(f"connected_components did not converge in {max_iter} iterations")
-    # For graphs whose diameter is NOT near-dup-tiny, use
-    # connected_components_star below: O(log^2 n) rounds regardless of
-    # diameter.
-
-
 def _dedup_edges(e: DataFrame) -> DataFrame:
     return e.filter(F.col("src") != F.col("dst")).distinct()
 
@@ -151,8 +67,8 @@ def _small_star(e: DataFrame) -> DataFrame:
     return _dedup_edges(relink.unionByName(self_link))
 
 
-# Edge-count ceiling for the driver union-find short-circuit in both
-# CC variants: 200k edges x 16 bytes is a few MB of driver state — the
+# Edge-count ceiling for connected_components' driver union-find
+# short-circuit: 200k edges x 16 bytes is a few MB of driver state — the
 # same order as the k-core broadcast guard — while every shipped SF's
 # near-dup / grid graph is orders of magnitude below it and a 100 TB
 # corpus graph is orders of magnitude above (taking the distributed
@@ -201,49 +117,28 @@ def _union_find_label_frame(e: DataFrame, labels: dict) -> DataFrame:
     return e.sparkSession.createDataFrame(sorted(labels.items()), schema=schema)
 
 
-def connected_components_star(
+def connected_components(
     edges: DataFrame, vertices: DataFrame, max_iter: int = 30
 ) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    contractions (Kiveris et al., "Connected Components in MapReduce
-    and Beyond", SOCC'14). Same output contract as
-    connected_components: (id, component = min reachable id).
+    """(id, component) with component = min vertex id reachable.
 
-    Why a second implementation: min-label propagation needs
-    O(diameter) rounds — perfect for near-dup clusters (diameter 2-3),
-    pathological for chain-shaped graphs. Star contraction halves
-    component height per round pair, converging in O(log^2 n) rounds
-    INDEPENDENT of diameter, with near-linear shuffle per round — the
-    variant to reach for at 100 TB when component shapes are unknown.
+    edges: columns (src, dst), undirected semantics. vertices: column
+    (id) — isolated vertices keep their own id. Raises if max_iter
+    rounds pass with the edge set still changing.
+
     Each round is two grouped aggregates + joins on the (shrinking)
-    edge set; lineage cut per round via localCheckpoint.
+    edge set; its checkpoint is LAZY and the convergence fingerprint
+    (count + XOR of row hashes over the distinct edge set; xor, unlike
+    sum, cannot overflow under ANSI mode) is the action that
+    materializes it — one job per round. The edge set is a fixpoint
+    of both stars exactly when every component is a star rooted at its
+    minimum.
 
-    Convergence: the edge set is a fixpoint of both stars exactly when
-    every component is a star rooted at its minimum; detected by an
-    order-independent fingerprint (count + XOR of row hashes — the
-    edge set is distinct, so xor fingerprints the set; xor, unlike
-    sum, cannot overflow under ANSI mode).
-
-    Round 8 (optimization): each round's checkpoint is LAZY and the
-    fingerprint aggregate is the action that materializes it — one
-    job (and one pass over the edge set) per round instead of two.
-    The aggregate touches every partition, so the checkpoint is fully
-    populated before the next round reads it; eager=True did the same
-    materialization as a separate job and then read the blocks again
-    for the fingerprint.
-
-    Round 8, small-graph short-circuit: when the deduped edge set is
-    at most {_CC_DRIVER_MAX_EDGES} rows (known for free from the
-    initial fingerprint), the components are computed with a driver
-    union-find instead of the distributed star loop — the same
-    mechanical size guard as the k-core broadcast hint below
-    (_KCORE_BROADCAST_MAX_VERTICES): at sf0.1 the near-dup edge set
-    is a few hundred rows and each star round costs more in job
-    launches than the whole union-find. Driver state is capped at
-    {_CC_DRIVER_MAX_EDGES} x 16 bytes (a few MB); larger graphs take
-    the distributed loop unchanged, so nothing driver-side grows with
-    the corpus. Labels are min-reachable-id either way — union-find
-    with min-id roots returns bit-identical components."""
+    Small-graph short-circuit: at most _CC_DRIVER_MAX_EDGES deduped
+    edges (known from the initial fingerprint) are labelled by a driver
+    union-find instead of the star loop — at sf0.1 the near-dup edge
+    set is a few hundred rows and each round costs more in job launches
+    than the whole union-find. Min-id roots give identical labels."""
     e = _dedup_edges(edges.select("src", "dst")).localCheckpoint(eager=False)
 
     def fingerprint(df: DataFrame):
@@ -272,7 +167,7 @@ def connected_components_star(
                 "id", F.coalesce("label", "id").alias("component")
             )
         fp = new_fp
-    raise RuntimeError(f"connected_components_star did not converge in {max_iter} rounds")
+    raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
 
 @query(
@@ -311,8 +206,7 @@ def q_dedup_clusters_exact_smallcorpus(spark: SparkSession, sf_dir: str) -> Data
     Semantics: Jaccard >= 0.8 pairs grown to transitive components,
     every doc labeled with its cluster's min doc_id.
 
-    Spark side: iterative min-label propagation (see
-    connected_components). Oracle: DuckDB recursive-CTE transitive
+    Spark side: connected_components. Oracle: DuckDB recursive-CTE transitive
     closure — same fixpoint, declarative form.
 
     Tokens are xxhash64-mapped to int64 before the pairwise intersect:
@@ -409,8 +303,7 @@ def q_identity_stitching(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the gated edge list is tiny relative to events (one
     groupBy); CC cost is bounded by the identity-graph size, not the
-    event volume — see connected_components for the per-iteration
-    shuffle story and connected_components_star for unknown shapes."""
+    event volume (see connected_components)."""
     e = load_table(spark, sf_dir, "events")
     ud = (
         e.select(
@@ -521,7 +414,7 @@ def _lsh_cluster_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
     vertices = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("id")
     )
-    cc = connected_components_star(edges, vertices)
+    cc = connected_components(edges, vertices)
     return cc.select(F.col("id").alias("doc_id"), F.col("component").alias("cluster_id"))
 
 

@@ -32,9 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..registry import query
+from ..registry import pin, query
 from ..sources.loader import load_table
-from ._pin import pin
 
 BITS = 8
 ANCHOR = "1995-01-01"
@@ -328,11 +327,8 @@ def q_cached_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_orders"),
         F.sum(F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)")).alias("cents"),
     )
-    # pin(), not a bare .cache(): same persist semantics (the plan
-    # still shows InMemoryTableScan on both branches), but the PREVIOUS
-    # invocation's cache entry is dropped first, so repeated bench runs
-    # re-materialize from parquet instead of timing cache reads.
-    mid = pin(mid, ("q_cached_reuse", "mid", sf_dir))
+    # pin(), not .cache(): a rerun recomputes instead of reading this run's blocks
+    mid = pin(mid)
     hist = mid.groupBy("n_orders").agg(
         F.count(F.lit(1)).alias("n_customers"),
         F.sum("cents").alias("bucket_cents"),

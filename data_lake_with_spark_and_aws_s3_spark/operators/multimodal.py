@@ -25,8 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..registry import query
-from ._pin import pin
+from ..registry import pin, query
 from ..sources.loader import fan_out, load_table
 
 
@@ -432,17 +431,9 @@ def q_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows, columns=["doc_id", "h0", "h1", "h2", "h3"]
             )
 
-    # pin(): the 5-long-per-doc hash frame feeds the band explode AND
-    # both verify sides — unpinned, Catalyst inlined the mapInPandas
-    # subtree at every reference (8 Python eval nodes in the before-
-    # plan, plans/r08/q_image_phash_dedup_before.txt), re-running the
-    # Python hashing pass per reference. Invocation-fresh (see
-    # operators/_pin.py), lineage kept.
+    # feeds the band explode AND both verify sides: hash once, not per reference
     hashes = pin(
-        d.mapInPandas(
-            ahash, "doc_id long, h0 long, h1 long, h2 long, h3 long"
-        ),
-        ("q_image_phash_dedup", "hashes", sf_dir),
+        d.mapInPandas(ahash, "doc_id long, h0 long, h1 long, h2 long, h3 long")
     )
     bands = hashes.select(
         "doc_id",

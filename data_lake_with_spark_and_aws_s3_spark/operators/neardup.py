@@ -21,9 +21,8 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.textops import ngram_join
-from ..registry import query
+from ..registry import pin, query
 from ..sources.loader import fan_out, load_table
-from ._pin import pin
 
 _N_MINHASH = 16
 _N_BANDS = 4  # 4 hashes per band
@@ -752,19 +751,10 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the recall join). Unpinned, Catalyst inlines the full shingle
     -> hash -> band -> verify pipeline at every reference — the
     before-plan scanned documents.parquet 36 times
-    (plans/r08/q_minhash_lsh_before.txt). pin() (invocation-fresh
-    persist, operators/_pin.py) materializes each pair list (a few
-    longs per near-dup pair) once per run, keeps lineage for fault
-    tolerance, and unpersists the previous run's frame so the bench
-    never times cache reads."""
-    X = pin(
-        _xx_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b"),
-        ("q_minhash_lsh", "xx_pairs", sf_dir),
-    )
-    M = pin(
-        _ml_exact_pairs(spark, sf_dir).select("doc_a", "doc_b"),
-        ("q_minhash_lsh", "ml_pairs", sf_dir),
-    )
+    (plans/r08/q_minhash_lsh_before.txt). pin() materializes each pair
+    list (a few longs per near-dup pair) once per run, lineage kept."""
+    X = pin(_xx_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b"))
+    M = pin(_ml_exact_pairs(spark, sf_dir).select("doc_a", "doc_b"))
 
     # raw-token precision check of the xx-verified pairs
     raw = load_table(spark, sf_dir, "documents").select(
@@ -1233,16 +1223,8 @@ def q_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     the (doc_a, shingle)-keyed verify join shuffle posting rows, not
     the corpus squared; every aggregate has map-side partials.
 
-    Fault posture (round 8): the exploded shingle frame (~10x corpus
-    bytes, three consumers) is pinned DISK_ONLY (operators/_pin.py),
-    NOT localCheckpoint — lineage is kept, so a lost executor
-    recomputes its blocks from the parquet scan instead of failing the
-    job, and the explosion never competes with shuffle/aggregate
-    execution memory. The pin (r8 optimization pass) also unpersists
-    the PREVIOUS invocation's frame: a bare persist() leaks results
-    across runs through the CacheManager's canonical-plan match
-    (measured: run 1 = 15.2 s, run 2 = 2.6 s reading the first run's
-    cache), which the bench methodology forbids."""
+    Fault posture: the shingle frame is pinned, not localCheckpoint'ed,
+    so a lost executor recomputes its blocks instead of failing the job."""
     # Scan fan-out + zip-form shingles (r8): identical shingle values
     # (positions 1..len-3 of the empty-filtered token array, ' '
     # joins), built the parallel, per-row-cheap way — see
@@ -1252,20 +1234,9 @@ def q_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.filter(F.split("text", " "), lambda x: x != "").alias("tk")
     )
     shingles = F.array_distinct(ngram_join(F.col("tk"), 4))
-    # Feeds sizes, postings AND verify (three consumers), so the
-    # exploded frame is materialized ONCE — pinned, not
-    # localCheckpoint'ed: persist keeps lineage, so at 100 TB a lost
-    # executor recomputes its shingle blocks from the parquet scan
-    # instead of failing the job (localCheckpoint severs lineage —
-    # VERDICT r7 "What's wrong" #1). DISK_ONLY because the explosion
-    # is ~10x corpus bytes — it must never compete with shuffle/agg
-    # memory at scale; local reads off the shuffle disks are cheap
-    # relative to the posting joins they feed. pin() (not a bare
-    # persist) so each invocation recomputes from parquet instead of
-    # silently reading the previous run's cache.
+    # three consumers; DISK_ONLY so the ~10x explosion never takes shuffle memory
     sh = pin(
         tk.select("doc_id", F.explode(shingles).alias("shingle")),
-        ("q_minhash_containment", "shingles", sf_dir),
         StorageLevel.DISK_ONLY,
     )
     size_a = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))

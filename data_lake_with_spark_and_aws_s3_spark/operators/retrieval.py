@@ -558,9 +558,9 @@ def q_ndcg_at_10(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q_rank_biased_overlap (round 6)
 # ---------------------------------------------------------------------
 
-_RBO_DEPTH = 10
-_RBO_P9 = [9**d for d in range(1, _RBO_DEPTH + 1)]   # 9^d  (p = 0.9)
-_RBO_P10 = [10**d for d in range(1, _RBO_DEPTH + 1)]  # 10^d
+_RBO_K = 10
+_RBO_P9 = [9**d for d in range(1, _RBO_K + 1)]   # 9^d  (p = 0.9)
+_RBO_P10 = [10**d for d in range(1, _RBO_K + 1)]  # 10^d
 
 
 @query(
@@ -583,7 +583,7 @@ _RBO_P10 = [10**d for d in range(1, _RBO_DEPTH + 1)]  # 10^d
              ROW_NUMBER() OVER (ORDER BY qty DESC, l_partkey) AS pos_b
       FROM agg
     ),
-    depths AS (SELECT CAST(d AS BIGINT) AS d FROM range(1, {_RBO_DEPTH + 1}) t(d)),
+    depths AS (SELECT CAST(d AS BIGINT) AS d FROM range(1, {_RBO_K + 1}) t(d)),
     x AS (
       SELECT depths.d,
              CAST((SELECT COUNT(*) FROM ra JOIN rb USING (l_partkey)
@@ -635,7 +635,7 @@ def q_rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # without ever holding the full ranking in one task).
     ra = (
         agg.orderBy(F.desc("rev"), F.asc("l_partkey"))
-        .limit(_RBO_DEPTH)
+        .limit(_RBO_K)
         .select(
             "l_partkey",
             F.row_number()
@@ -645,7 +645,7 @@ def q_rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rb = (
         agg.orderBy(F.desc("qty"), F.asc("l_partkey"))
-        .limit(_RBO_DEPTH)
+        .limit(_RBO_K)
         .select(
             "l_partkey",
             F.row_number()
@@ -654,7 +654,7 @@ def q_rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     both = ra.join(rb, "l_partkey")  # parts in both top-10 prefixes
-    depths = spark.range(1, _RBO_DEPTH + 1).select(F.col("id").alias("d"))
+    depths = spark.range(1, _RBO_K + 1).select(F.col("id").alias("d"))
     x = (
         depths.join(
             F.broadcast(both),
@@ -807,7 +807,7 @@ def q_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q_err_at_k (round 7)
 # ---------------------------------------------------------------------
 
-_ERR_DEPTH = 10
+_ERR_K = 10
 _ERR_GMAX = 3  # graded relevance 0..3 -> stop prob (2^g - 1) / 8
 # relevance grade = min(3, (10 - qty_rank) // 3): rank-derived, so the
 # grade distribution is scale-free (qty magnitudes grow with SF)
@@ -825,14 +825,14 @@ _ERR_GMAX = 3  # graded relevance 0..3 -> stop prob (2^g - 1) / 8
     ),
     top AS (
       SELECT l_partkey, rev, qty
-      FROM agg ORDER BY rev DESC, l_partkey LIMIT {_ERR_DEPTH}
+      FROM agg ORDER BY rev DESC, l_partkey LIMIT {_ERR_K}
     ),
     ranked AS (
       SELECT l_partkey, qty,
              CAST(ROW_NUMBER() OVER (ORDER BY rev DESC, l_partkey) AS BIGINT)
                AS pos,
              CAST(LEAST({_ERR_GMAX},
-                        ({_ERR_DEPTH} - ROW_NUMBER() OVER
+                        ({_ERR_K} - ROW_NUMBER() OVER
                            (ORDER BY qty DESC, l_partkey)) // 3) AS BIGINT)
                AS grade
       FROM top
@@ -884,7 +884,7 @@ def q_err_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("rev"),
         F.sum(F.col("l_quantity").cast("long")).alias("qty"),
     )
-    top = agg.orderBy(F.desc("rev"), F.asc("l_partkey")).limit(_ERR_DEPTH)
+    top = agg.orderBy(F.desc("rev"), F.asc("l_partkey")).limit(_ERR_K)
     w_pos = Window.orderBy(F.desc("rev"), F.asc("l_partkey"))
     w_qty = Window.orderBy(F.desc("qty"), F.asc("l_partkey"))
     ranked = top.select(
@@ -893,7 +893,7 @@ def q_err_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(w_pos).cast("long").alias("pos"),
         F.least(
             F.lit(_ERR_GMAX),
-            F.floor((F.lit(_ERR_DEPTH) - F.row_number().over(w_qty)) / 3),
+            F.floor((F.lit(_ERR_K) - F.row_number().over(w_qty)) / 3),
         )
         .cast("long")
         .alias("grade"),

@@ -1225,14 +1225,12 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (codegen'd relational form — measured faster than the map-side
     literal alternative, see its docstring); band self-join
     confines the quadratic verify to bucket interiors (O(sum of
-    bucket^2), never corpus^2); components use STAR CONTRACTION
-    (O(log^2 n) rounds independent of diameter) — the round-5 growth
-    sweep's synthetic tiles produced a >20-hop chain-shaped dup graph
-    that min-label propagation could not finish, exactly the failure
-    mode connected_components_star exists for. This is the 100 TB
+    bucket^2), never corpus^2); components use star contraction,
+    whose round count does not grow with diameter (growth-sweep tiles
+    produce >20-hop chain-shaped dup graphs). This is the 100 TB
     semantic-dedup recipe: embed once, bucket, verify inside buckets,
     cluster, keep representatives."""
-    from .graph import connected_components_star
+    from .graph import connected_components
 
     # r8: fan_out — the posexplode+quantize signature stage and the
     # verify-side dot products are per-row heavy on a one-task scan
@@ -1308,7 +1306,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("src", "dst")
     )
-    comp = connected_components_star(edges, e.select(F.col("vec_id").alias("id")))
+    comp = connected_components(edges, e.select(F.col("vec_id").alias("id")))
     return comp.select(
         F.col("id").alias("vec_id"),
         "component",

@@ -28,9 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..registry import query
+from ..registry import pin, query
 from ..sources.loader import load_table
-from ._pin import pin
 
 _TOL = 1e-9
 
@@ -311,11 +310,8 @@ def q_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     possible shuffle (|cells| == |langs x sources|)."""
     d = load_table(spark, sf_dir, "documents")
     o = d.groupBy("lang", "source").agg(F.count(F.lit(1)).alias("obs"))
-    # tiny; feeds marginals AND the cell join — pinned (invocation-fresh
-    # persist, operators/_pin.py): a bare .cache() would hand later
-    # invocations the previous run's blocks via the CacheManager's
-    # canonical-plan match, which the bench methodology forbids
-    o = pin(o, ("q_chi_square", "obs", sf_dir))
+    # tiny; feeds the marginals AND the cell join, so computed once
+    o = pin(o)
     rt = o.groupBy("lang").agg(F.sum("obs").alias("row_tot"))
     ct = o.groupBy("source").agg(F.sum("obs").alias("col_tot"))
     n = o.agg(F.sum("obs").alias("n"))

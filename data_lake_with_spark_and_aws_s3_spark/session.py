@@ -32,10 +32,7 @@ RUNTIME_CONFS: dict[str, str] = {
 
 def apply_runtime_confs(spark: SparkSession) -> None:
     for k, v in RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # read-only conf on this build — keep going
+        spark.conf.set(k, v)
 
 
 def get_spark(

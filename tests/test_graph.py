@@ -7,10 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from data_lake_with_spark_and_aws_s3_spark import REGISTRY
-from data_lake_with_spark_and_aws_s3_spark.operators.graph import (
-    connected_components,
-    connected_components_star,
-)
+from data_lake_with_spark_and_aws_s3_spark.operators.graph import connected_components
 from data_lake_with_spark_and_aws_s3_spark.sources.loader import load_table
 
 SF = "/root/testdata/sf0.01"
@@ -72,52 +69,14 @@ def test_components_handle_isolated_and_chain(spark):
     vertices = spark.createDataFrame([(v,) for v in [1, 2, 3, 10, 11, 99]], "id long")
     got = {r["id"]: r["component"] for r in connected_components(edges, vertices).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 99: 99}
-    star = {
-        r["id"]: r["component"]
-        for r in connected_components_star(edges, vertices).collect()
-    }
-    assert star == got
-
-
-def test_star_variant_matches_label_propagation_on_real_edges(spark):
-    """Both algorithms over the SAME Jaccard edge set must agree on
-    every (vertex, component) assignment."""
-    d = load_table(spark, SF, "documents")
-    toks = F.array_distinct(F.filter(F.split("text", " "), lambda x: x != ""))
-    t = d.select("doc_id", "lang", "source", toks.alias("ts"))
-    a = t.select(
-        F.col("doc_id").alias("src"), F.col("lang").alias("la"),
-        F.col("source").alias("sa"), F.col("ts").alias("tsa"),
-    )
-    b = t.select(
-        F.col("doc_id").alias("dst"), F.col("lang").alias("lb"),
-        F.col("source").alias("sb"), F.col("ts").alias("tsb"),
-    )
-    inter = F.size(F.array_intersect("tsa", "tsb"))
-    union = F.size("tsa") + F.size("tsb") - inter
-    edges = (
-        a.join(
-            b,
-            (F.col("la") == F.col("lb"))
-            & (F.col("sa") == F.col("sb"))
-            & (F.col("src") < F.col("dst")),
-        )
-        .filter(inter.cast("double") / union >= 0.8)
-        .select("src", "dst")
-        .localCheckpoint(eager=True)
-    )
-    vertices = d.select(F.col("doc_id").alias("id"))
-    prop = {r["id"]: r["component"] for r in connected_components(edges, vertices).collect()}
-    star = {r["id"]: r["component"] for r in connected_components_star(edges, vertices).collect()}
-    assert star == prop
 
 
 def test_star_variant_converges_on_long_chain(spark, monkeypatch):
-    """A 200-node path has diameter 199 — min-label propagation would
+    """A 200-node path has diameter 199 — label propagation would
     need ~200 rounds; star contraction must finish in O(log^2 n)
     (well under 30) and still label every node with the chain min.
-    The round-8 driver union-find short-circuit is DISABLED here so
-    the distributed star loop itself stays exercised."""
+    The driver union-find short-circuit is DISABLED here so the
+    distributed star loop itself stays exercised."""
     from data_lake_with_spark_and_aws_s3_spark.operators import graph
 
     monkeypatch.setattr(graph, "_CC_DRIVER_MAX_EDGES", 0)
@@ -126,17 +85,17 @@ def test_star_variant_converges_on_long_chain(spark, monkeypatch):
     vertices = spark.createDataFrame([(v,) for v in range(n)], "id long")
     got = {
         r["id"]: r["component"]
-        for r in connected_components_star(edges, vertices, max_iter=30).collect()
+        for r in connected_components(edges, vertices, max_iter=30).collect()
     }
     assert got == {v: 0 for v in range(n)}
 
 
 def test_cc_driver_shortcircuit_matches_distributed(spark, monkeypatch):
-    """Round-8 small-graph short-circuit: below _CC_DRIVER_MAX_EDGES
-    both CC variants label via a driver union-find. Both branches must
-    produce IDENTICAL (id, component) maps on the same graph —
-    including isolated vertices, multi-component graphs, and edges
-    given in arbitrary orientation."""
+    """Small-graph short-circuit: below _CC_DRIVER_MAX_EDGES CC labels
+    via a driver union-find. Both branches must produce IDENTICAL
+    (id, component) maps on the same graph — including isolated
+    vertices, multi-component graphs, and edges given in arbitrary
+    orientation."""
     from data_lake_with_spark_and_aws_s3_spark.operators import graph
 
     rows = [(9, 2), (2, 5), (10, 11), (7, 7), (3, 2), (12, 10), (6, 13)]
@@ -144,13 +103,12 @@ def test_cc_driver_shortcircuit_matches_distributed(spark, monkeypatch):
     vertices = spark.createDataFrame([(v,) for v in range(14)], "id long")
     expected = {0: 0, 1: 1, 2: 2, 3: 2, 4: 4, 5: 2, 6: 6, 7: 7, 8: 8,
                 9: 2, 10: 10, 11: 10, 12: 10, 13: 6}
-    for fn in (graph.connected_components_star, graph.connected_components):
-        fast = {r["id"]: r["component"] for r in fn(edges, vertices).collect()}
-        assert fast == expected, f"{fn.__name__} driver branch wrong"
+    cc = graph.connected_components
+    fast = {r["id"]: r["component"] for r in cc(edges, vertices).collect()}
+    assert fast == expected, "driver branch wrong"
     monkeypatch.setattr(graph, "_CC_DRIVER_MAX_EDGES", 0)
-    for fn in (graph.connected_components_star, graph.connected_components):
-        dist = {r["id"]: r["component"] for r in fn(edges, vertices).collect()}
-        assert dist == expected, f"{fn.__name__} distributed branch wrong"
+    dist = {r["id"]: r["component"] for r in cc(edges, vertices).collect()}
+    assert dist == expected, "distributed branch wrong"
 
 
 def test_cc_driver_shortcircuit_string_ids(spark, monkeypatch):
@@ -166,15 +124,16 @@ def test_cc_driver_shortcircuit_string_ids(spark, monkeypatch):
     vertices = spark.createDataFrame([(v,) for v in names], "id string")
     expected = {"bolt": "bolt", "new bolt": "bolt", "newer bolt": "bolt",
                 "cam": "cam", "camshaft": "cam", "gear": "gear"}
-    for fn in (graph.connected_components_star, graph.connected_components):
-        out = fn(edges, vertices)
-        assert dict(out.dtypes) == {"id": "string", "component": "string"}
-        fast = {r["id"]: r["component"] for r in out.collect()}
-        assert fast == expected, f"{fn.__name__} driver branch wrong on string ids"
+    cc = graph.connected_components
+    out = cc(edges, vertices)
+    assert dict(out.dtypes) == {"id": "string", "component": "string"}
+    fast = {r["id"]: r["component"] for r in out.collect()}
+    assert fast == expected, "driver branch wrong on string ids"
     monkeypatch.setattr(graph, "_CC_DRIVER_MAX_EDGES", 0)
-    for fn in (graph.connected_components_star, graph.connected_components):
-        dist = {r["id"]: r["component"] for r in fn(edges, vertices).collect()}
-        assert dist == expected, f"{fn.__name__} distributed branch wrong on string ids"
+    dist = cc(edges, vertices)
+    assert dict(dist.dtypes) == {"id": "string", "component": "string"}
+    dist = {r["id"]: r["component"] for r in dist.collect()}
+    assert dist == expected, "distributed branch wrong on string ids"
 
 
 def test_shared_frames_recompute_per_invocation(spark):
@@ -182,7 +141,7 @@ def test_shared_frames_recompute_per_invocation(spark):
     optimization pass removed as cross-run result caching): a second
     call must return a NEW frame — every invocation derives its own
     edges / cluster labels — and repeated computes must agree exactly.
-    tests/test_pin.py proves the same for pin()-based midframes."""
+    tests/test_pin.py proves the same for pinned midframes."""
     from data_lake_with_spark_and_aws_s3_spark.operators._edges import (
         copurchase_pair_weights,
     )

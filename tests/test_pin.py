@@ -1,25 +1,39 @@
-"""Invocation-freshness contract (round 8): in-query persist/cache may
-reuse a midframe WITHIN one query run, but a re-invocation must
-recompute from the parquet inputs — the bench times warm runs, and any
-CacheManager entry or module memo surviving a run makes those timings
-measure cache reads, which the methodology forbids.
+"""Invocation-freshness contract: in-query persist may reuse a midframe
+WITHIN one query run, but a re-invocation must recompute from the
+parquet inputs — the bench times warm runs, and any CacheManager entry
+or module memo surviving a run makes those timings measure cache reads,
+which the methodology forbids.
 
-Covers the pin() helper itself (behaviorally: an accumulator counts
-actual recomputation — DataFrame.storageLevel is canonical-PLAN-keyed,
-so it cannot distinguish run 1's entry from run 2's identical-plan
-entry) and the two formerly-memoized shared frames
-(_edges.copurchase_pair_weights, graph._lsh_cluster_frame).
+Covers registry.pin() and the query scope that releases its frames
+(behaviorally: an accumulator counts actual recomputation —
+DataFrame.storageLevel is canonical-PLAN-keyed, so it cannot
+distinguish run 1's entry from run 2's identical-plan entry) and the
+two formerly-memoized shared frames (_edges.copurchase_pair_weights,
+graph._lsh_cluster_frame).
 """
 
 from __future__ import annotations
 
+import threading
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
-from data_lake_with_spark_and_aws_s3_spark.operators import _edges, _pin
-from data_lake_with_spark_and_aws_s3_spark.operators._pin import pin
+from data_lake_with_spark_and_aws_s3_spark import registry
+from data_lake_with_spark_and_aws_s3_spark.operators import _edges
+from data_lake_with_spark_and_aws_s3_spark.registry import _scoped, pin
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def _held():
+    """Frames pinned by this context's current or most recent query."""
+    return [df for _, df in registry._HELD.get()]
+
+
+def _cached(df) -> bool:
+    return df.storageLevel != StorageLevel.NONE
 
 
 def test_pin_recomputes_on_reinvocation(spark):
@@ -34,13 +48,13 @@ def test_pin_recomputes_on_reinvocation(spark):
         calls.add(1)
         return x * 2
 
-    def build():  # same udf object -> identical canonical plan
-        return spark.range(100).select(bump("id").alias("v"))
+    # same udf object -> identical canonical plan on every invocation
+    run = _scoped(lambda spark_, sf_dir_: pin(spark_.range(100).select(bump("id").alias("v"))))
 
-    df1 = pin(build(), ("test_pin", "frame", "k1"))
+    df1 = run(spark, SF_DIR)
     assert df1.count() == 100
     assert calls.value == 100
-    df2 = pin(build(), ("test_pin", "frame", "k1"))
+    df2 = run(spark, SF_DIR)
     assert df2.agg(F.sum("v")).collect()[0][0] == 9900
     assert calls.value == 200, (
         "re-invocation read the previous run's cache instead of "
@@ -52,12 +66,45 @@ def test_pin_recomputes_on_reinvocation(spark):
     assert calls.value == 200
 
 
-def test_pin_distinct_keys_coexist(spark):
-    a = pin(spark.range(10).select(F.col("id").alias("a")), ("test_pin", "x"))
-    b = pin(spark.range(10).select(F.col("id").alias("b")), ("test_pin", "y"))
-    a.count(), b.count()
-    assert a.storageLevel.useMemory or a.storageLevel.useDisk
-    assert b.storageLevel.useMemory or b.storageLevel.useDisk
+def test_pins_in_one_query_coexist(spark):
+    def build(spark_, sf_dir_):
+        a = pin(spark_.range(10).select(F.col("id").alias("a")))
+        b = pin(spark_.range(10).select(F.col("id").alias("b")))
+        return a.crossJoin(b)
+
+    assert _scoped(build)(spark, SF_DIR).count() == 100
+    a, b = _held()
+    assert _cached(a) and _cached(b)
+
+
+def test_pin_outside_registered_query_raises(spark):
+    with pytest.raises(RuntimeError, match="outside a registered query"):
+        pin(spark.range(3))
+
+
+def test_threads_keep_each_others_pins(spark):
+    """A top-level entry releases only its OWN context's pins: thread B
+    entering a query must not unpersist thread A's in-flight frame."""
+    out = {}
+
+    def thread_a():
+        df = _scoped(
+            lambda spark_, sf_dir_: pin(spark_.range(11).select(F.col("id").alias("thread_a")))
+        )(spark, SF_DIR)
+        out["rows"] = df.count()
+        out["df"] = df
+
+    def thread_b():
+        _scoped(lambda spark_, sf_dir_: spark_.range(1))(spark, SF_DIR)
+
+    for target in (thread_a, thread_b):
+        t = threading.Thread(target=target)
+        t.start()
+        t.join(timeout=120)
+        assert not t.is_alive(), f"{target.__name__} did not finish"
+    assert out["rows"] == 11
+    assert _cached(out["df"]), "thread B's query entry unpersisted thread A's pin"
+    out["df"].unpersist()
 
 
 def test_copurchase_edges_not_memoized_across_calls(spark):
@@ -89,75 +136,70 @@ def test_lsh_cluster_frame_not_memoized_across_calls(spark):
 @pytest.mark.parametrize("name", ["q_minhash_containment", "q_cached_reuse",
                                   "q_chi_square", "q_minhash_lsh"])
 def test_pinned_queries_reinvoke_fresh(spark, name):
-    """End-to-end: a re-invocation of a pin()-using query registers NEW
-    pins under the same call-site keys (the old handles were
-    unpersisted at build time — semantics proved behaviorally above),
-    and returns identical rows."""
+    """End-to-end: a re-invocation of a pin()-using query pins NEW
+    frames (the old ones were unpersisted at its entry — semantics
+    proved behaviorally above), and returns identical rows."""
     from data_lake_with_spark_and_aws_s3_spark import REGISTRY
 
     fn = REGISTRY[name].fn
     r1 = fn(spark, SF_DIR).collect()
-    handles1 = {k: v for k, v in _pin._PINNED.items() if name in k}
-    assert handles1, f"expected {name} to pin at least one midframe"
-    df2 = fn(spark, SF_DIR)  # build only — pin() swaps entries at build time
-    handles2 = {k: v for k, v in _pin._PINNED.items() if name in k}
-    assert handles1.keys() == handles2.keys()
-    assert all(handles2[k] is not handles1[k] for k in handles1), (
+    held1 = _held()
+    assert held1, f"expected {name} to pin at least one midframe"
+    df2 = fn(spark, SF_DIR)  # build only — pins are made at build time
+    held2 = _held()
+    assert len(held1) == len(held2)
+    assert all(h2 is not h1 for h1 in held1 for h2 in held2), (
         f"{name}: re-invocation kept the previous run's pinned frame"
     )
     assert sorted(map(tuple, r1)) == sorted(map(tuple, df2.collect()))
 
 
 def test_cross_query_pins_cleared_on_next_query_entry(spark):
-    """Round-9 contract: a query invocation must not be able to read
-    ANOTHER query's pinned blocks. pin() keeps blocks registered in the
-    CacheManager after a query's collect (lineage-kept persist), and
-    CacheManager matches by canonicalized plan — so the guarantee is
-    enforced at query ENTRY: registry.query's wrapper unpersists every
-    pin of the application before the new query builds. Behaviorally:
-    after running pinned query A, merely BUILDING query B leaves no A
-    pins alive."""
+    """A query invocation must not be able to read ANOTHER query's
+    pinned blocks. pin() keeps blocks registered in the CacheManager
+    after a query's collect (lineage-kept persist), and CacheManager
+    matches by canonicalized plan — so the guarantee is enforced at
+    query ENTRY: registry.query's wrapper unpersists the context's
+    previous pins before the new query builds. Behaviorally: after
+    running pinned query A, merely BUILDING query B leaves no A pins
+    alive."""
     from data_lake_with_spark_and_aws_s3_spark import REGISTRY
 
     REGISTRY["q_minhash_containment"].fn(spark, SF_DIR).collect()
-    assert any(
-        "q_minhash_containment" in str(k) for k in _pin._PINNED
-    ), "expected containment to leave pins registered after its run"
+    held_a = _held()
+    assert held_a and all(map(_cached, held_a)), (
+        "expected containment to leave pins registered after its run"
+    )
     df_b = REGISTRY["q_minhash_lsh"].fn(spark, SF_DIR)
-    assert not any(
-        "q_minhash_containment" in str(k) for k in _pin._PINNED
-    ), "query B's entry left query A's pinned blocks alive (cross-query cache channel)"
+    assert not any(h is a for h in _held() for a in held_a)
+    assert not any(map(_cached, held_a)), (
+        "query B's entry left query A's pinned blocks alive (cross-query cache channel)"
+    )
     df_b.collect()
 
 
 def test_capstone_nested_queries_keep_component_pins(spark):
-    """The depth guard: a capstone calling component queries through
-    REGISTRY mid-build must NOT clear its own earlier components' pins
-    (only the outermost entry clears)."""
+    """A capstone calling component queries through REGISTRY mid-build
+    must NOT release its own earlier pins (only the outermost entry
+    releases)."""
     from data_lake_with_spark_and_aws_s3_spark import REGISTRY
-    from data_lake_with_spark_and_aws_s3_spark.operators._pin import pin
 
     calls = {"n": 0}
-    orig_depth = _pin._DEPTH
 
     def capstone(spark_, sf_dir_):
         calls["n"] += 1
-        assert _pin._DEPTH == orig_depth + 1
         # a midframe this capstone pins for its own consumers...
-        seeded = pin(
-            spark_.range(7).select(F.col("id").alias("seed")), ("test_nested", "seed")
-        )
+        seeded = pin(spark_.range(7).select(F.col("id").alias("seed")))
         seeded.count()
         # ...must survive a nested registered-query call mid-build
         REGISTRY["q_chi_square"].fn(spark_, sf_dir_)
-        assert any("test_nested" in str(k) for k in _pin._PINNED), (
+        held = _held()
+        assert any(h is seeded for h in held), (
             "nested query entry cleared the outer query's pins"
         )
+        assert _cached(seeded), "nested query entry unpersisted the outer frame"
+        assert len(held) == 2, "the nested query's own pin joins the outer scope"
         return spark_.range(1)
 
-    from data_lake_with_spark_and_aws_s3_spark.registry import _fresh_entry
-
-    wrapped = _fresh_entry(capstone)
-    wrapped(spark, SF_DIR)
+    _scoped(capstone)(spark, SF_DIR)
     assert calls["n"] == 1
-    assert _pin._DEPTH == orig_depth

@@ -73,7 +73,10 @@ def test_results_identical_under_forced_spill(spark, sf_dir):
     session clone with every spill threshold forced to a few rows and
     compare canonical results against the normal session."""
     from data_lake_with_spark_and_aws_s3_spark import REGISTRY
-    from data_lake_with_spark_and_aws_s3_spark.session import apply_runtime_confs
+    from data_lake_with_spark_and_aws_s3_spark.session import (
+        RUNTIME_CONFS,
+        apply_runtime_confs,
+    )
 
     def canon(df):
         pdf = df.toPandas()
@@ -81,6 +84,9 @@ def test_results_identical_under_forced_spill(spark, sf_dir):
         return pdf[cols].sort_values(cols).reset_index(drop=True)
 
     spill = spark.newSession()
+    # apply_runtime_confs sets every key on a live session: a static conf
+    # added to RUNTIME_CONFS must fail here, not be skipped
+    assert [k for k in RUNTIME_CONFS if not spill.conf.isModifiable(k)] == []
     apply_runtime_confs(spill)
     spill.conf.set("spark.sql.windowExec.buffer.spill.threshold", "7")
     spill.conf.set("spark.sql.windowExec.buffer.in.memory.threshold", "7")
